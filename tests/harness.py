@@ -81,3 +81,16 @@ def run_query_pair(spark, sf_dir: str, qfn, sql: str) -> list[str]:
     spark_pdf = qfn(spark, sf_dir).toPandas()
     oracle_pdf = duckdb_conn(sf_dir).execute(sql).fetchdf()
     return compare_frames(spark_pdf, oracle_pdf)
+
+
+def assert_fanout_only_exchange(plan: str) -> None:
+    """The only Exchange an executed plan may hold is the single fanout
+    round-robin spread of an under-split file scan
+    (operators/partitioning.py): at most one round-robin, no broadcast
+    and no hash/range shuffle."""
+    n_rr = plan.count("Exchange RoundRobinPartitioning")
+    assert plan.count("RoundRobinPartitioning") == n_rr <= 1, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert plan.count("Exchange") == n_rr, plan
+    assert "hashpartitioning" not in plan, plan
+    assert "rangepartitioning" not in plan, plan

@@ -285,8 +285,12 @@ def test_pagerank_iteration_plan(spark, sf01):
     gate (PR_LOCAL_MAX_EDGES, r7) resolves the fixed point driver-side,
     so the final plan is a LocalTableScan of broadcast-back ranks; the
     distributed iteration plan (one join + one left join + integer
-    arithmetic per round) is asserted on a forced-distributed run."""
+    arithmetic per round) is asserted on a forced-distributed run.  The
+    driver-local ranks come back as an Arrow local relation, never a
+    pickled-row RDD scan that needs Python workers to read."""
     plan = _plan(em.queries()["kg_pagerank"](spark, sf01))
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
     assert plan.count("MapInPandas") == 0
     assert plan.count("FlatMapCoGroupsInPandas") == 0
     assert "CartesianProduct" not in plan
@@ -303,6 +307,17 @@ def test_pagerank_iteration_plan(spark, sf01):
     assert dplan.count("MapInPandas") == 0
     assert "BatchEvalPython" not in dplan
     assert "CartesianProduct" not in dplan
+
+
+def test_canonical_nodes_labels_are_a_local_relation(spark, sf01):
+    """kg_canonical_nodes at sf0.01 takes the driver-local CC strategy:
+    the labels broadcast back from an Arrow LocalTableScan, so the one
+    RDD scan left in the plan is the checkpointed node universe."""
+    plan = _plan(em.queries()["kg_canonical_nodes"](spark, sf01))
+    assert "LocalTableScan [id" in plan
+    assert plan.count("ExistingRDD") == 1
+    assert "BroadcastHashJoin" in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_lm_score_is_pure_catalyst(spark, sf01):

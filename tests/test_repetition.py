@@ -5,7 +5,9 @@ docs."""
 
 import pandas as pd
 
-from tests.harness import compare_frames, duckdb_conn
+from tests.harness import (
+    assert_fanout_only_exchange, compare_frames, duckdb_conn,
+)
 from uk_ner_presidio_demo_spark.operators.repetition import (
     repetition_keep, repetition_stats,
 )
@@ -63,9 +65,7 @@ def test_repetition_plan_is_single_crossing_no_shuffle(spark, sf01):
     df = repetition_stats(read_tpch(spark, sf01, "documents"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
-    assert plan.count("Exchange") == plan.count("RoundRobinPartitioning")
-    assert "hashpartitioning" not in plan
-    assert "rangepartitioning" not in plan
+    assert_fanout_only_exchange(plan)
 
 
 FREQ_ORACLE_SQL = FREQ_PROFILE_ORACLE_SQL

@@ -22,21 +22,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .driver_local import collect_if_small, local_frame
+
 
 def _node_id(etype_col: str, surface_col: str):
     return F.concat_ws(":", F.col(etype_col), F.col(surface_col))
 
 
-# AQE-style physical-strategy gate for the CC loop: when the measured
-# EDGE count (the iterated working set — singletons never iterate) is
-# below this, the component structure is solved driver-side with
-# union-find and the labels broadcast back.  2e5 edges of ~60-byte string
-# ids is ~25 MB — broadcast-table-sized, far under Spark's own 8 GB
-# broadcast ceiling.  Above the gate (the 1e8+-surface vocabulary of a
-# real 100-TB corpus) the distributed min-label loop below runs
-# unchanged.  Rationale: each distributed iteration costs join+agg+
-# checkpoint job scheduling (~2.5 s wall for a 327-node graph at sf0.1),
-# which dwarfs the actual labeling work until the graph is huge.
+# Size gate for the CC loop (shared helper: operators/driver_local.py):
+# up to this many EDGES (singletons never iterate; 2e5 ~60-byte id pairs
+# is ~25 MB, broadcast-sized) union-find labels the components
+# driver-side; above it (the 1e8+-surface vocabulary of a 100-TB corpus)
+# the distributed min-label loop below runs, whose per-iteration job
+# scheduling dwarfs the labeling work on small graphs.
 CC_LOCAL_MAX_EDGES = 200_000
 
 
@@ -75,10 +73,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     the per-iteration join/agg by orders of magnitude on real entity
     universes (most surfaces are unique).
 
-    Physical strategy is size-gated (see CC_LOCAL_MAX_EDGES): small edge
-    sets are solved driver-side and broadcast; large ones iterate
-    distributed.  Both paths produce identical labelings
-    (tests/test_canonicalize.py property)."""
+    Size-gated (CC_LOCAL_MAX_EDGES): small edge sets are labeled
+    driver-side, with the identical labeling."""
     n = nodes.select(
         "entity_type", "norm_surface",
         _node_id("entity_type", "norm_surface").alias("id"),
@@ -93,10 +89,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         _node_id("entity_type", "dst").alias("dst"),
     ).localCheckpoint(eager=True)
 
-    if e.count() <= local_max_edges:
-        lbl = _local_labels(e.collect())
-        spark = nodes.sparkSession
-        labels = spark.createDataFrame(lbl, "id string, label string")
+    rows = collect_if_small(e, local_max_edges)
+    if rows is not None:
+        labels = local_frame(nodes.sparkSession, _local_labels(rows),
+                             "id string, label string")
         return n.join(F.broadcast(labels), "id", "left").select(
             "entity_type",
             "norm_surface",

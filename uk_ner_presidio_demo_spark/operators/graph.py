@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .driver_local import collect_if_small, local_frame
+
 EDGE_KEY = ["subj", "pred", "obj"]
 
 
@@ -100,7 +102,7 @@ def merge_edge_snapshots(prev: DataFrame, delta: DataFrame) -> DataFrame:
 # the canonical distributed PageRank step.  K is fixed (bounded work);
 # lineage is cut every PR_CKPT_EVERY iterations (fixed-k loops don't
 # need the CC loop's per-iteration cuts — see the constant below); the
-# only driver scalar is N (one count, same gating shape as CC).  Hub
+# only driver scalar is N (one count on the distributed path).  Hub
 # skew on the dst sum is absorbed by partial aggregation (sum is
 # algebraic — the same argument as the CC min-label groupBy, SCALE.md
 # §7b).
@@ -123,16 +125,10 @@ PR_DAMP_DEN = 100
 # bit-identical at any cadence (bit-parity gate in test_pagerank).
 PR_CKPT_EVERY = 8
 
-# Physical-strategy gate (r7, VERDICT r6 #2 — the CC_LOCAL_MAX_EDGES
-# pattern, operators/canonicalize.py:64): at or below this many edges
-# the fixed point runs DRIVER-LOCAL on collected rows and the result is
-# broadcast back; above it, the distributed join+agg loop runs.  Ranks
-# are INTEGER, so the two strategies are bit-identical (exact-equality
-# property test in tests/test_pagerank.py) — the gate is scheduling,
-# not semantics.  Motivation: at sf0.1 the canonical-triples graph is
-# ~468 nodes, and 8 distributed shuffle stages of fixed overhead were
-# 22% of the r6 headline wall; a production 10^9-edge graph takes the
-# distributed path exactly as before.
+# Size gate (shared helper: operators/driver_local.py): up to this many
+# edges the fixed point runs DRIVER-LOCAL, above it the distributed loop.
+# Integer ranks make the strategies bit-identical (tests/test_pagerank.py):
+# the gate is scheduling, not semantics.
 PR_LOCAL_MAX_EDGES = 200_000
 
 
@@ -150,6 +146,8 @@ def _local_pagerank(edge_rows, k: int) -> list[tuple]:
         out_w[r.subj] = out_w.get(r.subj, 0) + r.w
         edges.append((r.subj, r.obj, r.w))
     n = len(nodes)
+    if n == 0:
+        return []
     base = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * n)
     rank = {v: PR_SCALE // n for v in nodes}
     for _ in range(k):
@@ -168,10 +166,7 @@ def pagerank(edges: DataFrame, k: int = 8,
     """Weighted directed PageRank over (subj, obj, n_obs) edges;
     returns (node, rank_fp) with rank_fp in BIGINT PR_SCALE units.
 
-    Physical strategy is size-gated (PR_LOCAL_MAX_EDGES, the CC
-    pattern): small edge sets solve driver-side, large ones run the
-    distributed join+agg loop; integer ranks make the two paths
-    bit-identical (exact-equality gate in tests/test_pagerank.py).
+    Size-gated (PR_LOCAL_MAX_EDGES): small edge sets solve driver-side.
 
     Multi-edges must be pre-aggregated (edge_rollup then a pred
     collapse, or any (src, dst, weight) frame).  k >= 1 fixed
@@ -192,20 +187,11 @@ def pagerank(edges: DataFrame, k: int = 8,
     if k < 1:
         raise ValueError(f"pagerank: k must be >= 1, got {k}")
 
-    if edges.count() <= local_max_edges:
-        # size-gated local strategy (see PR_LOCAL_MAX_EDGES): solve the
-        # fixed point driver-side; one collect bounded by the gate
-        import pyspark.sql.types as T
-
-        spark = edges.sparkSession
-        schema = T.StructType([
-            T.StructField("node", edges.schema["subj"].dataType),
-            T.StructField("rank_fp", T.LongType()),
-        ])
-        rows = edges.collect()
-        if not rows:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(_local_pagerank(rows, k), schema)
+    rows = collect_if_small(edges, local_max_edges)
+    if rows is not None:
+        node_t = edges.schema["subj"].dataType.simpleString()
+        return local_frame(edges.sparkSession, _local_pagerank(rows, k),
+                           f"node {node_t}, rank_fp long")
 
     nodes = (
         edges.select(F.col("subj").alias("node"))
@@ -303,13 +289,24 @@ def pagerank_oracle_sql(ct_parquet: str, k: int = 8) -> str:
     """
 
 
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(u < v) undirected simple graph of (subj, obj) edges, checkpointed."""
+    return (
+        edges.select("subj", "obj")
+        .filter(F.col("subj") != F.col("obj"))
+        .select(
+            F.least("subj", "obj").alias("u"),
+            F.greatest("subj", "obj").alias("v"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
 # --- k-core of the undirected KG ------------------------------------------
 
-# Same physical-strategy gate family as CC / PageRank: small edge sets
-# peel driver-side, large ones run the distributed loop; the k-core of
-# a graph is UNIQUE (order-independent peeling), so the two strategies
-# are set-identical — exact-equality property test in
-# tests/test_kcore.py.
+# Same size gate as CC / PageRank: the k-core is UNIQUE, so the local and
+# distributed peels are set-identical (tests/test_kcore.py).
 KCORE_LOCAL_MAX_EDGES = 200_000
 
 
@@ -351,33 +348,18 @@ def k_core(edges: DataFrame, k: int,
     via count).  Rounds are bounded by the peel DEPTH (degeneracy
     ordering layers), which is small for real KGs; `max_iter` is the
     explicit bound, and exceeding it raises rather than silently
-    returning a non-fixed-point.  Physical strategy is size-gated
-    (KCORE_LOCAL_MAX_EDGES): the k-core is unique, so local and
-    distributed peels agree exactly (property-tested)."""
+    returning a non-fixed-point.  Size-gated (KCORE_LOCAL_MAX_EDGES):
+    small edge sets peel driver-side."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    und = (
-        edges.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .select(
-            F.least("subj", "obj").alias("u"),
-            F.greatest("subj", "obj").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    n_und = und.count()  # one action: gates the strategy AND seeds the loop
-    if n_und <= local_max_edges:
-        alive = sorted(_local_k_core(und.collect(), k))
-        import pyspark.sql.types as T
+    und = _undirected(edges)
+    schema = f"node {und.schema['u'].dataType.simpleString()}"
+    rows = collect_if_small(und, local_max_edges)
+    if rows is not None:
+        alive = [(n,) for n in sorted(_local_k_core(rows, k))]
+        return local_frame(edges.sparkSession, alive, schema)
 
-        schema = T.StructType(
-            [T.StructField("node", und.schema["u"].dataType)]
-        )
-        return spark.createDataFrame([(n,) for n in alive], schema)
-
-    cur, n_cur = und, n_und
+    cur, n_cur = und, und.count()  # seeds the convergence check
     for _ in range(max_iter):
         deg = (
             cur.select(F.col("u").alias("node"))
@@ -400,7 +382,7 @@ def k_core(edges: DataFrame, k: int,
             # means every remaining node already holds degree >= k
             return keep.select(F.col("node"))
         if n_nxt == 0:
-            return spark.createDataFrame([], keep.schema)
+            return local_frame(edges.sparkSession, [], schema)
         cur, n_cur = nxt, n_nxt
     raise RuntimeError(
         f"k_core: no fixed point within max_iter={max_iter} rounds — "
@@ -424,16 +406,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     Suri-Vassilvitskii / Cohen MR-triangle argument).  Hub nodes that
     would explode a naive a-b-c join are exactly the ones oriented
     INWARD."""
-    und = (
-        edges.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .select(
-            F.least("subj", "obj").alias("u"),
-            F.greatest("subj", "obj").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
@@ -465,8 +438,5 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     tri = wedges.join(closing, ["b", "c"]).count()
     n_nodes = deg.count()
     n_edges = und.count()
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        [(n_nodes, n_edges, tri)],
-        "n_nodes long, n_edges long, n_triangles long",
-    )
+    return local_frame(edges.sparkSession, [(n_nodes, n_edges, tri)],
+                       "n_nodes long, n_edges long, n_triangles long")

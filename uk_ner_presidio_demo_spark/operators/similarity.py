@@ -513,10 +513,11 @@ def _emb_block_rows(emb: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             # emb_block_keys stays the scalar sequential fold (frozen
-            # sign semantics); numpy float64 elements go through the
-            # same IEEE ops as the former [float(x) ...] copies
+            # sign semantics); widen the float32 Arrow cells so it runs
+            # the oracle's float64 ops under NumPy 2 (NEP 50) too
             for vec_id, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                for tbl, bucket in emb_block_keys(vec):
+                wide = np.asarray(vec, np.float64)
+                for tbl, bucket in emb_block_keys(wide):
                     rows.append((int(vec_id), tbl, bucket))
             yield pd.DataFrame(rows, columns=["vec_id", "tbl", "bucket"])
 

@@ -36,6 +36,7 @@ from ..operators.canonicalize import canonical_nodes, canonical_triples
 from ..operators.detect import (
     anonymized_turns, detect_turns, mentions_from_turns,
 )
+from ..operators.driver_local import local_frame
 from ..operators.linking import link_entities
 from ..operators.triples import emit_triples
 from ..sources.tables import read_aliases, read_transcripts, valid_text_predicate
@@ -139,9 +140,9 @@ class StagedPipeline:
              time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
             for r in self.results
         ]
-        df = self.spark.createDataFrame(
-            rows, "stage string, skipped boolean, rows long, wall_sec double,"
-                  " run_at string"
+        df = local_frame(
+            self.spark, rows, "stage string, skipped boolean, rows long,"
+                              " wall_sec double, run_at string"
         )
         df.coalesce(1).write.mode("append").parquet(
             str(Path(self.out_dir) / "metrics")
