@@ -6,6 +6,8 @@ columns; exact on non-floats, 1e-9-relative on floats)."""
 from __future__ import annotations
 
 import math
+import re
+from collections import Counter
 
 import duckdb
 import numpy as np
@@ -94,3 +96,31 @@ def assert_fanout_only_exchange(plan: str) -> None:
     assert plan.count("Exchange") == n_rr, plan
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan
+
+
+# Every Python physical node kind Spark 4.1.2 plans, by the name that
+# opens its line in an executed-plan string.  TransformWithStateInPySpark
+# (streaming transformWithStateInPandas) runs only with the optional
+# protobuf package, so no test builds it; it is counted by name.
+PYTHON_EXEC_NODES = frozenset({
+    "MapInPandas", "MapInArrow",
+    "ArrowEvalPython", "BatchEvalPython",
+    "ArrowEvalPythonUDTF", "BatchEvalPythonUDTF",
+    "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow",
+    "ArrowAggregatePython", "ArrowWindowPython",
+    "FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark",
+})
+
+# tree drawing, the "!" of an unresolved node and the "*(n) " codegen
+# stage id precede the node name
+_NODE_NAME = re.compile(r"^[\s:+\-|!]*(?:\*\(\d+\)\s*)?([A-Za-z]+)")
+
+
+def python_exec_nodes(plan: str) -> Counter:
+    """Python physical nodes of an executed-plan string, counted by
+    kind.  Matches whole node names, so ArrowEvalPythonUDTF is not also
+    an ArrowEvalPython and a UDF named like a node does not count."""
+    names = (_NODE_NAME.match(line) for line in plan.splitlines())
+    return Counter(m.group(1) for m in names
+                   if m and m.group(1) in PYTHON_EXEC_NODES)

@@ -5,9 +5,12 @@ refactor that silently drops a broadcast, un-pushes a filter, or adds an
 extra Arrow crossing fails CI rather than a cluster run.
 """
 
+from collections import Counter
+
 import pytest
 
 import __spark_entry__ as em
+from tests.harness import PYTHON_EXEC_NODES, python_exec_nodes
 
 
 def _plan(df) -> str:
@@ -43,9 +46,10 @@ def test_cooccurrence_runs_detection_once(spark, sf01):
     """kg_entity_cooccurrence self-joins the per-turn refs: without the
     lineage cut the detection kernel ran TWICE (VERDICT r2 #3).  The
     localCheckpoint hides the kernel from the final plan entirely, so the
-    correct plan shows ZERO MapInPandas (and r2's broken one showed 2)."""
+    correct plan shows ZERO Python nodes (and r2's broken one showed 2
+    MapInPandas)."""
     plan = _plan(em.queries()["kg_entity_cooccurrence"](spark, sf01))
-    assert plan.count("MapInPandas") == 0
+    assert not python_exec_nodes(plan), plan
     assert "Scan ExistingRDD" in plan  # the checkpointed refs
 
 
@@ -66,7 +70,7 @@ def test_review_mentions_runs_detection_once(spark, sf01):
     detection kernel out of the final plan (kernel ran in the
     materialization job), same invariant as kg_entity_cooccurrence."""
     plan = _plan(em.queries()["kg_review_mentions"](spark, sf01))
-    assert plan.count("MapInPandas") == 0
+    assert not python_exec_nodes(plan), plan
     assert "Scan ExistingRDD" in plan
 
 
@@ -78,7 +82,7 @@ def test_incremental_canon_is_one_broadcast_join(spark, sf01):
     plan = _plan(em.queries()["kg_incremental_canon"](spark, sf01))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("MapInPandas") == 0
+    assert not python_exec_nodes(plan), plan
 
 
 def test_partial_overlap_verify_scores_candidates_once(spark, sf01):
@@ -162,7 +166,7 @@ def test_emb_neardup_is_blocked_not_collected(spark, sf01):
     plan = _plan(em.queries()["emb_neardup"](spark, sf01))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("MapInPandas") == 0  # both legs read the checkpoint
+    assert not python_exec_nodes(plan), plan  # both legs read the checkpoint
 
 
 def test_no_rdd_probe_in_operators():
@@ -262,8 +266,8 @@ def test_canonical_triples_runs_detection_once(spark, sf01):
     final plan entirely (it runs once, eagerly, at construction; the r2
     cooccurrence double-kernel defect pattern)."""
     plan = _plan(em.queries()["kg_canonical_triples"](spark, sf01))
-    assert plan.count("MapInPandas") == 0
-    assert plan.count("FlatMapCoGroupsInPandas") == 1  # the triples cogroup
+    # the triples cogroup is the one Python node left
+    assert python_exec_nodes(plan) == Counter(FlatMapCoGroupsInPandas=1)
 
 
 def test_edge_upsert_merge_plan(spark, sf01):
@@ -272,10 +276,8 @@ def test_edge_upsert_merge_plan(spark, sf01):
     final plan (same two-consumer invariant as kg_canonical_triples), and
     the MERGE must be a plain join (no cartesian, no Python verify)."""
     plan = _plan(em.queries()["kg_edge_upsert"](spark, sf01))
-    assert plan.count("MapInPandas") == 0
-    assert plan.count("FlatMapCoGroupsInPandas") == 0
+    assert not python_exec_nodes(plan), plan
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_pagerank_iteration_plan(spark, sf01):
@@ -291,10 +293,8 @@ def test_pagerank_iteration_plan(spark, sf01):
     plan = _plan(em.queries()["kg_pagerank"](spark, sf01))
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
-    assert plan.count("MapInPandas") == 0
-    assert plan.count("FlatMapCoGroupsInPandas") == 0
+    assert not python_exec_nodes(plan), plan
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
 
     # forced-distributed twin: the last-iteration plan stays pure JVM
     from uk_ner_presidio_demo_spark.operators.graph import pagerank
@@ -304,20 +304,19 @@ def test_pagerank_iteration_plan(spark, sf01):
         "subj string, obj string, n_obs long",
     )
     dplan = _plan(pagerank(edges, k=2, local_max_edges=0))
-    assert dplan.count("MapInPandas") == 0
-    assert "BatchEvalPython" not in dplan
+    assert not python_exec_nodes(dplan), dplan
     assert "CartesianProduct" not in dplan
 
 
 def test_canonical_nodes_labels_are_a_local_relation(spark, sf01):
-    """kg_canonical_nodes at sf0.01 takes the driver-local CC strategy:
-    the labels broadcast back from an Arrow LocalTableScan, so the one
-    RDD scan left in the plan is the checkpointed node universe."""
+    """kg_canonical_nodes at sf0.01 takes the driver-local linking and CC
+    strategies: the node universe and the labels broadcast back to it
+    are both Arrow LocalTableScans, so no RDD scan is left in the plan."""
     plan = _plan(em.queries()["kg_canonical_nodes"](spark, sf01))
     assert "LocalTableScan [id" in plan
-    assert plan.count("ExistingRDD") == 1
+    assert plan.count("ExistingRDD") == 0
     assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan
+    assert not python_exec_nodes(plan), plan
 
 
 def test_lm_score_is_pure_catalyst(spark, sf01):
@@ -326,8 +325,7 @@ def test_lm_score_is_pure_catalyst(spark, sf01):
     a driver-built literal frame), no cartesian, and both ilog joins
     must be explicit broadcasts."""
     plan = _plan(em.queries()["txt_lm_score"](spark, sf01))
-    assert plan.count("MapInPandas") == 0
-    assert "BatchEvalPython" not in plan
+    assert not python_exec_nodes(plan), plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastExchange") >= 2
     # the model table is cut behind its localCheckpoint: each leg's
@@ -350,14 +348,12 @@ def test_triangles_and_asof_plan_hygiene(spark, sf01):
     O(|L|x|R|)/key), exactly one window, no Python."""
     tri = _plan(em.queries()["kg_triangles"](spark, sf01))
     assert "CartesianProduct" not in tri
-    assert "BatchEvalPython" not in tri
-    assert tri.count("MapInPandas") == 0
+    assert not python_exec_nodes(tri), tri
 
     asof = _plan(em.queries()["events_asof_view"](spark, sf01))
     assert "CartesianProduct" not in asof
     assert "BroadcastNestedLoopJoin" not in asof
-    assert "BatchEvalPython" not in asof
-    assert asof.count("MapInPandas") == 0
+    assert not python_exec_nodes(asof), asof
 
 
 def test_q5_star_join_all_dims_broadcast(spark, sf01):
@@ -383,3 +379,88 @@ def test_span_excision_plan_hygiene(spark, sf01):
     assert plan.count("MapInPandas") == 2
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_python_exec_nodes_counts_every_kind(spark, tmp_path):
+    """tests/harness.python_exec_nodes, the counter behind the `no Python
+    node` gates above: one plan of each Python node kind Spark plans,
+    each counted exactly once and as its own kind (a substring count of
+    "MapInPandas" passes every other kind silently)."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf, udf, udtf
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    df = spark.range(4).selectExpr("id", "id % 2 AS g",
+                                   "CAST(id AS DOUBLE) AS v")
+    grouped = df.groupBy("g")
+
+    @pandas_udf("double")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    @pandas_udf("double")
+    def total(s: pd.Series) -> float:
+        return float(s.sum())
+
+    @udf("double")
+    def ident(x):
+        return x
+
+    @udtf(returnType="x: int")
+    class Rows:
+        def eval(self, n: int):
+            yield (n,)
+
+    @udtf(returnType="x: int", useArrow=True)
+    class ArrowRows:
+        def eval(self, n: int):
+            yield (n,)
+
+    cases = {
+        "MapInPandas": df.mapInPandas(lambda it: it, df.schema),
+        "MapInArrow": df.mapInArrow(lambda it: it, df.schema),
+        "ArrowEvalPython": df.select(plus_one("v")),
+        "BatchEvalPython": df.select(ident("v")),
+        "BatchEvalPythonUDTF": Rows(F.lit(1)),
+        "ArrowEvalPythonUDTF": ArrowRows(F.lit(1)),
+        "FlatMapGroupsInPandas": grouped.applyInPandas(lambda p: p,
+                                                       df.schema),
+        "FlatMapGroupsInArrow": grouped.applyInArrow(lambda t: t, df.schema),
+        "FlatMapCoGroupsInPandas": grouped.cogroup(grouped).applyInPandas(
+            lambda a, b: a, df.schema),
+        "FlatMapCoGroupsInArrow": grouped.cogroup(grouped).applyInArrow(
+            lambda a, b: a, df.schema),
+        "ArrowAggregatePython": grouped.agg(total("v")),
+        "ArrowWindowPython": df.select(
+            total("v").over(Window.partitionBy("g"))),
+    }
+    plans = {kind: _plan(d) for kind, d in cases.items()}
+
+    # the stateful kind exists only in a streaming plan
+    src_dir = str(tmp_path / "in")
+    df.select("id", "g").write.parquet(src_dir)
+
+    def passthrough(key, pdfs, state):
+        yield from pdfs
+
+    query = (
+        spark.readStream.schema("id long, g long").parquet(src_dir)
+        .groupBy("g").applyInPandasWithState(
+            passthrough, "id long, g long", "n long", "Update",
+            GroupStateTimeout.NoTimeout)
+        .writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True).start()
+    )
+    query.awaitTermination()
+    plans["FlatMapGroupsInPandasWithState"] = (
+        query._jsq.streamingQuery().lastExecution().executedPlan()
+        .toString())
+
+    for kind, plan in plans.items():
+        assert python_exec_nodes(plan) == Counter({kind: 1}), plan
+    # transformWithState needs the optional protobuf package
+    assert PYTHON_EXEC_NODES - plans.keys() == {
+        "TransformWithStateInPySpark"}

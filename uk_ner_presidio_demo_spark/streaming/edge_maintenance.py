@@ -51,6 +51,10 @@ from ..operators.graph import EDGE_KEY, edge_rollup, merge_edge_snapshots
 
 _V_RE = re.compile(r"^v(\d+)$")
 
+# The grain every published version is written with.  Reading a version
+# with it runs no parquet footer-inference job.
+SNAPSHOT_DDL = "subj string, pred string, obj string, n_obs bigint"
+
 
 def snapshot_versions(root: Path) -> list[int]:
     """Published snapshot versions (ascending).  `_tmp*` and anything
@@ -90,7 +94,8 @@ def read_snapshot(spark, root: Path, asof_batch: int | None = None) -> DataFrame
             f"no published snapshot at {root}"
             + (f" as of batch {asof_batch}" if asof_batch is not None else "")
         )
-    return spark.read.parquet(str(Path(root) / f"v{vs[-1]}"))
+    return spark.read.schema(SNAPSHOT_DDL).parquet(
+        str(Path(root) / f"v{vs[-1]}"))
 
 
 def edge_merge_batch_fn(root: Path, keep_versions: int = 3):
@@ -141,9 +146,8 @@ def edge_merge_batch_fn(root: Path, keep_versions: int = 3):
         if prev_id is None:
             merged = delta.select(*EDGE_KEY, "n_obs")
         else:
-            prev = spark.read.parquet(str(root / f"v{prev_id}")).select(
-                *EDGE_KEY, "n_obs"
-            )
+            prev = spark.read.schema(SNAPSHOT_DDL).parquet(
+                str(root / f"v{prev_id}"))
             merged = merge_edge_snapshots(prev, delta).select(
                 *EDGE_KEY, "n_obs"
             )
